@@ -134,9 +134,10 @@ def detect_enrich_layout(pages: DataFrame,
     The rasterized chunk row already holds both the pixmap stand-in and the
     page's text layer, so running inference, per-region text extraction and
     reading-order ranking in ONE mapInPandas stage avoids a shuffle, a
-    cogroup and a second decode of the page payload. This is the pipeline's
-    default hot path; the unfused operators remain for detections sourced
-    externally. Emits RAW names/values — run normalize_detections after.
+    cogroup and a second decode of the page payload. It runs over an
+    already rasterized page table (rasterize_pages output); run_pipeline
+    uses rasterize_detect_enrich, which also does the render. Emits RAW
+    names/values — run normalize_detections after.
     """
     from ..algorithms import clip_text, xy_cut_order
 
@@ -220,9 +221,9 @@ def detect_enrich_layout(pages: DataFrame,
 def rasterize_detect_enrich(planned: DataFrame,
                             backend_factory=StubDetectorBackend,
                             profile=None) -> DataFrame:
-    """r9 hot path: plan chunks -> ONE mapInPandas stage doing rasterize
-    (real render work, checksum semantics identical to
-    rasterize._render_page) + detection + clipped text + XY-cut.
+    """The pipeline's extraction stage: plan chunks -> ONE mapInPandas
+    stage doing rasterize (real render work, rasterize._render_page) +
+    detection + clipped text + XY-cut.
 
     Versus the two-stage rasterize_pages |> detect_enrich_layout chain
     this removes a full JVM->Python->JVM round trip of the page table
@@ -233,53 +234,61 @@ def rasterize_detect_enrich(planned: DataFrame,
     StubDetectorBackend the detections are read straight off the parsed
     page dict — value-identical to ``detect_batch(json.dumps(page))``
     because the stub's parse of the serialized page is the page (pinned
-    by tests/test_pipeline.py's fused-vs-unfused parity and the
-    pipeline oracle queries); any other backend still receives
-    serialized page payloads through its documented ``detect_batch``
-    contract, batched per Arrow batch with the same whole-batch-then-
-    per-page fallback as detect_enrich_layout.
+    by tests/test_pipeline.py's check of ``enriched`` against the
+    synthdata spec and the pipeline oracle queries); any other backend
+    still receives serialized page payloads through its documented
+    ``detect_batch`` contract, batched per Arrow batch with the same
+    whole-batch-then-per-page fallback as detect_enrich_layout.
 
     Emits RAW names/values plus ``reading_order_rank``/``text`` and the
-    quarantine columns ``stage``/``error`` ('rasterize' for chunk-decode
-    and render failures, 'detect' for inference/enrichment failures —
-    the same split the two-stage chain produced). Run
-    normalize_detections after dropping ``stage``."""
+    columns ``stage``/``error``, which mark two more row kinds besides the
+    detections (``stage`` null):
+
+      * page rows — one per page whose render succeeded, ``stage='page'``,
+        ``det_idx=-1``, ``error`` null, the page's ``width``/``height``.
+        A page whose detect leg later fails keeps its page row, so
+        per-doc page counts read from this one output;
+      * quarantine rows — ``error`` set, ``stage`` 'rasterize' for
+        chunk-decode and render failures, 'detect' for inference/
+        enrichment failures (the same split the two-stage chain
+        produced).
+
+    Run normalize_detections after (it passes ``stage``/``error``
+    through)."""
     from ..algorithms import clip_text, xy_cut_order
     from .rasterize import _render_page
 
     schema = (RAW_DETECTION_SCHEMA
               + ", reading_order_rank int, text string, "
               "stage string, error string")
+    names = [c.split()[0] for c in schema.split(", ")]
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         backend = backend_factory()  # once per task, never per row/batch
         stub_fast = type(backend) is StubDetectorBackend
         for pdf in it:
-            cols: dict[str, list] = {
-                "url": [], "page_no": [], "width": [], "height": [],
-                "det_idx": [], "class_id": [], "raw_name": [],
-                "confidence": [], "x1": [], "y1": [], "x2": [], "y2": [],
-                "reading_order_rank": [], "text": [], "stage": [],
-                "error": [],
-            }
+            cols: dict[str, list] = {c: [] for c in names}
+            out = list(cols.values())
+
+            def emit(url, page_no, w, h, det=None, det_idx=-1, rank=-1,
+                     text=None, stage=None, error=None):
+                # the one row writer for all three row kinds; a page or
+                # quarantine row (det None) carries the -1/null placeholders
+                if det is None:
+                    det_vals = (-1, None, None, None, None, None, None)
+                else:
+                    x1, y1, x2, y2 = det["bbox"]
+                    det_vals = (det["class_id"], det["raw_name"],
+                                det["confidence"], x1, y1, x2, y2)
+                for col, v in zip(out, (url, page_no, w, h, det_idx, *det_vals,
+                                        rank, text, stage, error)):
+                    col.append(v)
 
             def emit_error(url, page_no, w, h, stage, exc):
                 # C6 error containment: a bad chunk/page becomes a
                 # quarantine row, never a failed job
-                cols["url"].append(url)
-                cols["page_no"].append(int(page_no))
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["det_idx"].append(-1)
-                cols["class_id"].append(-1)
-                cols["raw_name"].append(None)
-                cols["confidence"].append(None)
-                for c in ("x1", "y1", "x2", "y2"):
-                    cols[c].append(None)
-                cols["reading_order_rank"].append(-1)
-                cols["text"].append(None)
-                cols["stage"].append(stage)
-                cols["error"].append(f"{type(exc).__name__}: {exc}")
+                emit(url, int(page_no), w, h, stage=stage,
+                     error=f"{type(exc).__name__}: {exc}")
 
             # rasterize leg: decode chunks, render pages (error rows keep
             # the two-stage chain's 'rasterize' stage label)
@@ -320,6 +329,7 @@ def rasterize_detect_enrich(planned: DataFrame,
 
             for idx, (url, pg) in enumerate(pages):
                 page_no, w, h = pg["page_no"], pg["width"], pg["height"]
+                emit(url, page_no, w, h, stage="page")
                 try:
                     if stub_fast:
                         dets = backend.detect_page(pg)
@@ -337,23 +347,7 @@ def rasterize_detect_enrich(planned: DataFrame,
                     emit_error(url, page_no, w, h, "detect", exc)
                     continue
                 for i, d in enumerate(dets):
-                    cols["url"].append(url)
-                    cols["page_no"].append(page_no)
-                    cols["width"].append(w)
-                    cols["height"].append(h)
-                    cols["det_idx"].append(i)
-                    cols["class_id"].append(d["class_id"])
-                    cols["raw_name"].append(d["raw_name"])
-                    cols["confidence"].append(d["confidence"])
-                    x1, y1, x2, y2 = d["bbox"]
-                    cols["x1"].append(x1)
-                    cols["y1"].append(y1)
-                    cols["x2"].append(x2)
-                    cols["y2"].append(y2)
-                    cols["reading_order_rank"].append(ranks[i])
-                    cols["text"].append(texts[i])
-                    cols["stage"].append(None)
-                    cols["error"].append(None)
+                    emit(url, page_no, w, h, d, i, ranks[i], texts[i])
             yield pd.DataFrame(cols)
 
     return planned.mapInPandas(run, schema=schema, profile=profile)
@@ -364,9 +358,11 @@ def normalize_detections(raw: DataFrame) -> DataFrame:
     layout_detector.py:143-146 (``name.replace('_','-').title().replace(' ','-')``
     == translate to spaces -> initcap -> translate back), confidence rounded
     to 4 dp and bbox to 2 dp (layout_detector.py:46-58). Pure column exprs —
-    whole-stage codegen, no Python. Passes through enrichment columns
-    (reading_order_rank, text) when the fused detect path produced them."""
-    extra = [c for c in ("reading_order_rank", "text", "error") if c in raw.columns]
+    whole-stage codegen, no Python. Passes through the fused stage's
+    enrichment and row-kind columns (reading_order_rank, text, stage,
+    error) when present."""
+    extra = [c for c in ("reading_order_rank", "text", "stage", "error")
+             if c in raw.columns]
     return raw.select(
         "url",
         "page_no",

@@ -15,7 +15,8 @@ Spark shape: the O(n*m) pair scoring is an equi-join on (url, page_no,
 item_type) with the theta predicates as native column expressions — Catalyst
 executes a hash join on the equi key and the per-page groups are tiny, so no
 custom strategy is needed. Only the greedy tie-chain resolution is Python
-(applyInPandas over candidate groups, usually 0-3 rows each).
+(one vectorized pandas_udf over collect_list'ed candidate groups, usually
+0-3 rows each).
 """
 
 from __future__ import annotations

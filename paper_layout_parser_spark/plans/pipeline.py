@@ -1,14 +1,18 @@
 """End-to-end extraction pipeline (SURVEY §3.1 Spark shape):
 
-pages -> plan_splits (skew salting) -> rasterize -> detect (batched UDF)
-      -> normalize (native) -> enrich (clipped text + XY-cut, cogrouped)
-      -> { stats aggs  ||  caption matching -> extraction }
-      -> groupBy(url) doc-text assembly
+pages -> plan_splits (skew salting)
+      -> ONE mapInPandas stage: render + detect + clipped text + XY-cut
+         (rasterize_detect_enrich; emits detection, page and quarantine
+         rows) -> normalize (native) -> persist once
+      -> { enriched (detection rows) -> stats aggs || caption matching
+           || groupBy(url) doc-text assembly;
+           page rows -> per-doc page counts;
+           error rows -> quarantine }
 
-The intermediate ``enriched`` DataFrame is the hub: stats, matching and
-assembly all branch from it, so callers that need several outputs should
-checkpoint/persist it once (see sources.catalog for the Iceberg/parquet
-stage-checkpoint helper).
+Every page is rendered once: the persisted fused output is the hub that
+enriched, quarantine and the per-doc page counts all read. Release it with
+``PipelineOutputs.unpersist()`` (see sources.catalog for the Iceberg/parquet
+stage-checkpoint helper that replaces the persist on a cluster).
 """
 
 from __future__ import annotations
@@ -21,25 +25,32 @@ from pyspark.sql import functions as F
 from ..operators.assembly import assemble_doc_text
 from ..operators.detect import (
     StubDetectorBackend,
-    detect_layout,
     normalize_detections,
     rasterize_detect_enrich,
 )
 from ..operators.matching import match_captions
-from ..operators.page_text import enrich_detections
-from ..operators.rasterize import plan_splits, probe_pages, rasterize_pages
+from ..operators.rasterize import plan_splits, rasterize_pages
 from ..operators.stats import doc_stats
 
 
 @dataclass
 class PipelineOutputs:
-    rasterized: DataFrame     # one row per page
+    # one row per page, from a separate rasterize_pages lineage: reading it
+    # re-renders every page. Only crops (render_crops) and VLM requests
+    # (build_vlm_requests) read it; the default job never does
+    rasterized: DataFrame
     detections: DataFrame     # normalized detections
     enriched: DataFrame       # + reading_order_rank, clipped text
     matched: DataFrame        # extracted items with captions
     doc_text: DataFrame       # url, doc_text (byte-identity surface)
     doc_stats: DataFrame      # per-url totals
-    quarantine: DataFrame | None = None  # failed pages (url, page_no, error)
+    quarantine: DataFrame     # failed pages (url, page_no, stage, error)
+    fused: DataFrame          # normalized fused-stage output (the cache)
+
+    def unpersist(self) -> None:
+        """Release the pipeline's one cached frame. ``enriched`` and the
+        other outputs derive from it, so their own unpersist() is a no-op."""
+        self.fused.unpersist()
 
 
 def run_pipeline(
@@ -48,56 +59,37 @@ def run_pipeline(
     chunk_pages: int = 16,
     num_partitions: int | None = None,
     persist_enriched: bool = True,
-    fused: bool = True,
 ) -> PipelineOutputs:
-    # persist_enriched: matched / doc_text / stats all branch from
-    # `enriched`; without it each branch re-executes the UDF chain from the
-    # scan. On a cluster, replace the persist with a
-    # catalog.checkpoint_stage (same cut point, durable + resumable).
+    # persist_enriched: enriched / quarantine / page counts (and through
+    # them matched, doc_text, doc_stats) all read the fused output; without
+    # the persist each one re-runs the render stage from the scan. On a
+    # cluster, replace the persist with a catalog.checkpoint_stage (same
+    # cut point, durable + resumable).
     planned = plan_splits(pages, chunk_pages=chunk_pages, num_partitions=num_partitions)
-    ras_all = rasterize_pages(planned)
-    # C6 error containment: failed pages become quarantine rows at every
-    # stage, never failed jobs (main.py:336-354 per-doc try/except analogue)
-    ras_quarantine = ras_all.where(F.col("error").isNotNull()).select(
-        "url", "page_no", F.lit("rasterize").alias("stage"), "error"
-    )
-    rasterized = ras_all.where(F.col("error").isNull()).drop("error")
-    if fused:
-        # default hot path (r9): rasterize + inference + clipped text +
-        # XY-cut in ONE mapInPandas stage — one Python boundary for the
-        # whole chain instead of two, no page-payload re-serialization
-        # between stages (see rasterize_detect_enrich). `rasterized`
-        # stays the standalone two-stage lineage for the consumers that
-        # need page rows (crop re-render, per-doc page counts) — same
-        # recompute-on-demand behavior as before, the page table was
-        # never persisted here.
-        fused_raw = rasterize_detect_enrich(planned, backend_factory)
-        quarantine = fused_raw.where(F.col("error").isNotNull()).select(
-            "url", "page_no", "stage", "error"
-        )
-        raw = normalize_detections(fused_raw.drop("stage"))
-        enriched = raw.where(F.col("error").isNull()).drop("error")
-        det = enriched.drop("reading_order_rank", "text")
-    else:
-        det = normalize_detections(detect_layout(rasterized, backend_factory))
-        enriched = enrich_detections(det, rasterized)
-        quarantine = ras_quarantine
+    rasterized = rasterize_pages(planned).where(F.col("error").isNull()).drop("error")
+    # rasterize + inference + clipped text + XY-cut in ONE mapInPandas
+    # stage, the only render of the job (see rasterize_detect_enrich)
+    fused = normalize_detections(rasterize_detect_enrich(planned, backend_factory))
     if persist_enriched:
-        enriched = enriched.persist()
-    matched = match_captions(enriched)
-    doc_text = assemble_doc_text(enriched)
-    # page counts from the rasterized rows (covers zero-detection pages)
-    # instead of a second decode pass over the raw payloads
-    total_pages = rasterized.groupBy("url").agg(
+        fused = fused.persist()
+    enriched = fused.where(F.col("stage").isNull()).drop("stage", "error")
+    # C6 error containment: failed chunks/pages are quarantine rows with
+    # their stage label, never failed jobs (main.py:336-354 analogue)
+    quarantine = fused.where(F.col("error").isNotNull()).select(
+        "url", "page_no", "stage", "error"
+    )
+    # page rows count every rendered page, including zero-detection pages
+    # and pages whose detect leg failed
+    total_pages = fused.where(F.col("stage") == "page").groupBy("url").agg(
         F.count("*").cast("int").alias("total_pages")
     )
-    stats = doc_stats(enriched, total_pages=total_pages)
     return PipelineOutputs(
         rasterized=rasterized,
-        detections=det,
+        detections=enriched.drop("reading_order_rank", "text"),
         enriched=enriched,
-        matched=matched,
-        doc_text=doc_text,
-        doc_stats=stats,
+        matched=match_captions(enriched),
+        doc_text=assemble_doc_text(enriched),
+        doc_stats=doc_stats(enriched, total_pages=total_pages),
         quarantine=quarantine,
+        fused=fused,
     )

@@ -2,15 +2,16 @@
 byte-identity of assembled text, stats parity with the Python spec,
 detection parity, skew-plan behavior."""
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
 from paper_layout_parser_spark import synthdata as sd
 from paper_layout_parser_spark.corpus import build_pages
-from paper_layout_parser_spark.operators.rasterize import plan_splits, probe_pages
+from paper_layout_parser_spark.operators.rasterize import plan_splits
 from paper_layout_parser_spark.operators.stats import (
     class_stats,
-    doc_stats,
     extraction_stats,
     page_detection_counts,
     summary_report,
@@ -63,9 +64,9 @@ def test_detections_match_spec(corpus):
 
 
 def test_doc_stats_and_summary(corpus):
-    pages, out = corpus
-    stats = {r["url"]: r for r in doc_stats(
-        out.enriched, total_pages=probe_pages(pages)).collect()}
+    _, out = corpus
+    stats = {r["url"]: r for r in out.doc_stats.collect()}
+    assert len(stats) == N_DOCS
     for doc_id in range(N_DOCS):
         url = sd.url_of(doc_id)
         blocks = [b for p in range(1, sd.n_pages(doc_id) + 1)
@@ -76,9 +77,41 @@ def test_doc_stats_and_summary(corpus):
         import math
         expected_avg = math.floor(len(blocks) / sd.n_pages(doc_id) * 100 + 0.5) / 100
         assert r["average_detections_per_page"] == expected_avg
-    summ = summary_report(doc_stats(out.enriched, total_pages=probe_pages(pages))).collect()[0]
+    summ = summary_report(out.doc_stats).collect()[0]
     assert summ["total_documents"] == N_DOCS
     assert summ["total_pages"] == sum(sd.n_pages(d) for d in range(N_DOCS))
+
+
+def test_page_counts_include_detect_fault_pages(spark):
+    """A page that renders but fails detection still counts toward its
+    document's total_pages, and quarantines exactly once as 'detect'."""
+    good_block = {"b": 0, "class_id": 0, "name": "Title", "conf": 0.9,
+                  "bbox": [10.0, 10.0, 100.0, 50.0], "text": "title p1"}
+    bad_block = {"b": 0, "class_id": 0, "conf": 0.9,  # no 'name'
+                 "bbox": [10.0, 10.0, 100.0, 50.0], "text": "title p2"}
+    doc = {"v": 1, "pages": [
+        {"page_no": 1, "width": 400, "height": 400, "blocks": [good_block]},
+        {"page_no": 2, "width": 400, "height": 400, "blocks": [bad_block]},
+    ]}
+    body = json.dumps(doc).encode()
+    rows = [
+        ("u_clean", sd.doc_html(4)),
+        ("u_detect_fault", sd.HTML_MAGIC + b"\x00\x00\x00\x02" + body),
+    ]
+    pages = spark.createDataFrame(rows, "url string, html binary").select(
+        "url",
+        F.lit("2020-01-01").cast("timestamp").alias("warc_ts"),
+        "html",
+        F.lit("").alias("text"),
+        F.lit("en").alias("lang"),
+    )
+    out = run_pipeline(pages)
+    stats = {r["url"]: r for r in out.doc_stats.collect()}
+    assert stats["u_detect_fault"]["total_pages"] == 2
+    assert stats["u_detect_fault"]["total_detections"] == 1
+    assert stats["u_clean"]["total_pages"] == sd.n_pages(4)
+    q = [(r["url"], r["page_no"], r["stage"]) for r in out.quarantine.collect()]
+    assert q == [("u_detect_fault", 2, "detect")]
 
 
 def test_class_stats_exact_average(corpus):
@@ -184,16 +217,33 @@ def test_rasterize_page_counts(corpus):
         assert r["count"] == sd.n_pages(doc_id)
 
 
-def test_fused_and_unfused_paths_identical(spark):
+def test_enriched_matches_spec(spark):
+    """Every enriched row of the single extraction path equals the synthdata
+    spec: model-output det_idx, normalized class, rounded values, clipped
+    text, and a reading order that is (y1, x1) order on this corpus."""
+    n = 15
     pages = build_pages(spark, SF_SMALL).where(
-        F.regexp_extract("url", r"([0-9]+)$", 1).cast("long") < 15
-    ).persist()
-    cols = ["url", "page_no", "det_idx", "class_name", "confidence",
-            "x1", "y1", "x2", "y2", "reading_order_rank", "text"]
-    a = run_pipeline(pages, fused=True).enriched.select(cols)
-    b = run_pipeline(pages, fused=False).enriched.select(cols)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+        F.regexp_extract("url", r"([0-9]+)$", 1).cast("long") < n
+    )
+    cols = ["url", "page_no", "width", "height", "det_idx", "class_id",
+            "class_name", "confidence", "x1", "y1", "x2", "y2",
+            "reading_order_rank", "text"]
+    out = run_pipeline(pages)
+    got = sorted(tuple(r) for r in out.enriched.select(cols).collect())
+    out.unpersist()
+    want = []
+    for doc_id in range(n):
+        for p in range(1, sd.n_pages(doc_id) + 1):
+            w, h = sd.page_dims(doc_id, p)
+            blocks = sd.page_blocks(doc_id, p)
+            order = sorted(range(len(blocks)),
+                           key=lambda i: (blocks[i]["y1"], blocks[i]["x1"], i))
+            for i, b in enumerate(blocks):
+                want.append((sd.url_of(doc_id), p, w, h, i, b["class_id"],
+                             b["class_name"], b["confidence"], b["x1"],
+                             b["y1"], b["x2"], b["y2"], order.index(i),
+                             b["text"]))
+    assert got == sorted(want)
 
 
 def test_determinism_under_repartitioning(spark):
@@ -208,7 +258,7 @@ def test_determinism_under_repartitioning(spark):
         text = {r["url"]: r["doc_text"] for r in out.doc_text.collect()}
         items = {(r["url"], r["item_id"]): (r["cap_y1"], r["caption_text"])
                  for r in out.matched.collect()}
-        out.enriched.unpersist()
+        out.unpersist()
         return text, items
 
     t1, i1 = run(16, 8)

@@ -1,7 +1,7 @@
 """Physical-plan regression guards: the properties documented in
 docs/PLANS.md must survive refactors — pushdown reaching the scan, the
 single pre-rasterize repartition, the top-k group-limit pushdown, and cache
-reuse of the enriched hub."""
+reuse of the one cached fused-stage output."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -47,16 +47,34 @@ def test_topk_uses_window_group_limit(spark):
     assert plan.count("WindowGroupLimit") >= 2  # Partial + Final
 
 
+def _outside_cache(plan: str) -> str:
+    """The plan's lines minus every InMemoryRelation subtree (the cached
+    plan printed below each InMemoryTableScan)."""
+    kept, skip_below = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if skip_below is not None and depth > skip_below:
+            continue
+        skip_below = None
+        if "InMemoryRelation" in line:
+            skip_below = depth
+            continue
+        kept.append(line)
+    return "\n".join(kept)
+
+
 def test_branches_reuse_persisted_enriched(spark):
     pages = build_pages(spark, SF_SMALL).where(
         F.regexp_extract("url", r"([0-9]+)$", 1).cast("long") < 5
     )
     out = run_pipeline(pages)  # persist_enriched=True default
     out.enriched.count()       # materialize the cache
-    plan = plan_of(spark, out.doc_text, "simple")
-    assert "InMemoryTableScan" in plan
-    # the UDF chain must NOT appear again above the cached scan
-    assert "MapInPandas" not in plan.split("InMemoryRelation")[0]
+    for df in (out.doc_text, out.doc_stats, out.quarantine):
+        plan = plan_of(spark, df, "simple")
+        assert "InMemoryTableScan" in plan
+        # no render stage may run again above the cached scan
+        assert "MapInPandas" not in _outside_cache(plan), plan
+    out.unpersist()
 
 
 def test_per_page_crop_math_is_pure_projection(spark):
