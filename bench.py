@@ -316,6 +316,8 @@ def _update_doc_text_ledger(doc_text_s: float, n_pages: int,
 def run_extraction(spark, pages_path: str) -> dict:
     """End-to-end extraction job: pages table -> ... -> doc_text + matched
     items. Returns timings and corpus size."""
+    from pyspark.sql import functions as F
+
     from paper_layout_parser_spark.corpus import build_ground_truth
     from paper_layout_parser_spark.operators.evaluate import (
         compare_matches,
@@ -325,8 +327,8 @@ def run_extraction(spark, pages_path: str) -> dict:
 
     t0 = time.monotonic()
     pages = spark.read.parquet(pages_path)
-    out = run_pipeline(pages, persist_enriched=True)
-    n_docs = out.doc_text.count()          # forces rasterize+detect+enrich+assembly
+    out = run_pipeline(pages)
+    n_docs = out.doc_text.count()          # forces the fused stage + assembly
     t_doc_text = time.monotonic() - t0
 
     t1 = time.monotonic()
@@ -339,7 +341,7 @@ def run_extraction(spark, pages_path: str) -> dict:
     evaluation_summary(compare_matches(gt, out.matched)).collect()
     t_eval = time.monotonic() - t2
 
-    n_pages = out.rasterized.count()
+    n_pages = out.fused.where(F.col("stage") == "page").count()
     out.unpersist()
     out.matched.unpersist()
     return {
@@ -356,23 +358,20 @@ def stage_walls(spark, pages_path: str) -> dict:
     """Per-stage wall decomposition of the extraction job, for scaling
     ATTRIBUTION (VERDICT r5 ask #2): each stage is timed against its
     PERSISTED upstream, so a stage's wall is its own work, not its
-    lineage's. The fused headline job intentionally does NOT materialize
-    these cut points — the sum of stage walls exceeds the fused wall;
-    the per-stage ratio across parallelism levels is the signal, the
-    absolute sum is not."""
+    lineage's. The stages are plan_splits, the fused render+detect+enrich
+    stage (normalized, as run_pipeline persists it) and doc-text assembly.
+    The headline job does NOT materialize the planned chunks, so the sum
+    of stage walls exceeds its wall; the per-stage ratio across
+    parallelism levels is the signal, the absolute sum is not."""
     from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
     from paper_layout_parser_spark.operators.assembly import assemble_doc_text
     from paper_layout_parser_spark.operators.detect import (
-        StubDetectorBackend,
-        detect_enrich_layout,
         normalize_detections,
+        rasterize_detect_enrich,
     )
-    from paper_layout_parser_spark.operators.rasterize import (
-        plan_splits,
-        rasterize_pages,
-    )
+    from paper_layout_parser_spark.operators.rasterize import plan_splits
 
     walls = {}
     pages = spark.read.parquet(pages_path)
@@ -383,27 +382,19 @@ def stage_walls(spark, pages_path: str) -> dict:
     walls["plan_splits"] = time.monotonic() - t
 
     t = time.monotonic()
-    ras = (rasterize_pages(planned).where(F.col("error").isNull())
-           .drop("error").persist(StorageLevel.MEMORY_AND_DISK))
-    n_pages = ras.count()
-    walls["rasterize"] = time.monotonic() - t
-
-    t = time.monotonic()
-    enriched = (
-        normalize_detections(detect_enrich_layout(ras, StubDetectorBackend))
-        .where(F.col("error").isNull()).drop("error")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    enriched.count()
-    walls["detect_enrich"] = time.monotonic() - t
+    fused = normalize_detections(rasterize_detect_enrich(planned)).persist(
+        StorageLevel.MEMORY_AND_DISK)
+    fused.count()
+    walls["fused"] = time.monotonic() - t
+    n_pages = fused.where(F.col("stage") == "page").count()
+    enriched = fused.where(F.col("stage").isNull()).drop("stage", "error")
 
     t = time.monotonic()
     n_docs = assemble_doc_text(enriched).count()
     walls["assemble"] = time.monotonic() - t
 
     planned.unpersist()
-    ras.unpersist()
-    enriched.unpersist()
+    fused.unpersist()
     return {"walls": walls, "n_pages": n_pages, "n_docs": n_docs}
 
 

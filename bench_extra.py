@@ -6,10 +6,12 @@ optimization round needs lives here (guide §1: measure first, isolate
 with the noop sink, label jobs).
 
 Modes:
-  --stages    per-stage wall decomposition of the extraction chain at
-              $SPARK_GRAFT_SF_DIR (each stage timed against a persisted
-              upstream) plus noop-sink isolation of the three pipeline
-              queries (doc_text / caption_match / eval_summary).
+  --stages    per-stage wall decomposition of the extraction job at
+              $SPARK_GRAFT_SF_DIR — plan_splits, the fused render+detect+
+              enrich stage, assembly, caption matching, each timed against
+              a persisted upstream — plus best-of-3 end-to-end timings of
+              the three pipeline queries (doc_text / caption_match /
+              eval_summary).
   --kernels   single-process micro-profile of the per-page Python work
               inside the rasterize/detect stages (render kernel, JSON
               encode/decode, clip_text, xy_cut) — apportions the Python
@@ -55,15 +57,11 @@ def stages_mode() -> None:
     from bench import materialize_pages, run_extraction
     from paper_layout_parser_spark.operators.assembly import assemble_doc_text
     from paper_layout_parser_spark.operators.detect import (
-        StubDetectorBackend,
-        detect_enrich_layout,
         normalize_detections,
+        rasterize_detect_enrich,
     )
     from paper_layout_parser_spark.operators.matching import match_captions
-    from paper_layout_parser_spark.operators.rasterize import (
-        plan_splits,
-        rasterize_pages,
-    )
+    from paper_layout_parser_spark.operators.rasterize import plan_splits
 
     spark = _spark()
     sc = spark.sparkContext
@@ -79,22 +77,15 @@ def stages_mode() -> None:
     planned.count()
     out["plan_splits"] = round(time.monotonic() - t, 3)
 
-    sc.setJobDescription("stage: rasterize")
+    sc.setJobDescription("stage: fused (render + detect + enrich)")
     t = time.monotonic()
-    ras = (rasterize_pages(planned).where(F.col("error").isNull())
-           .drop("error").persist(StorageLevel.MEMORY_AND_DISK))
-    out["n_pages"] = ras.count()
-    out["rasterize"] = round(time.monotonic() - t, 3)
-
-    sc.setJobDescription("stage: detect_enrich")
-    t = time.monotonic()
-    enriched = (
-        normalize_detections(detect_enrich_layout(ras, StubDetectorBackend))
-        .where(F.col("error").isNull()).drop("error")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    fused = normalize_detections(rasterize_detect_enrich(planned)).persist(
+        StorageLevel.MEMORY_AND_DISK)
+    fused.count()
+    out["fused"] = round(time.monotonic() - t, 3)
+    out["n_pages"] = fused.where(F.col("stage") == "page").count()
+    enriched = fused.where(F.col("stage").isNull()).drop("stage", "error")
     out["n_det"] = enriched.count()
-    out["detect_enrich"] = round(time.monotonic() - t, 3)
 
     sc.setJobDescription("stage: assemble")
     t = time.monotonic()
@@ -107,8 +98,7 @@ def stages_mode() -> None:
     out["match_captions"] = round(time.monotonic() - t, 3)
 
     planned.unpersist()
-    ras.unpersist()
-    enriched.unpersist()
+    fused.unpersist()
 
     # fused end-to-end timings, bench methodology, best-of-3
     runs = [run_extraction(spark, pages_path) for _ in range(3)]
@@ -241,7 +231,7 @@ def explain_mode(tag: str = "before") -> None:
 
     pages_path = materialize_pages(spark, "/root/testdata/sf0.001")
     pages = spark.read.parquet(pages_path)
-    out = run_pipeline(pages, persist_enriched=True)
+    out = run_pipeline(pages)
     dump("doc_text", out.doc_text)
     dump("caption_match", out.matched)
     # mirror run_extraction: matched is persisted+counted before the eval leg

@@ -5,26 +5,32 @@ a single giant document (10^4 pages) hidden inside one row becomes a
 straggler task, so the Spark version splits work at the (url, page_range)
 grain BEFORE the expensive stage:
 
-  1. ``probe_pages``     — cheap metadata probe (page count only; the real
-                           backend is ``fitz.open(...).page_count``).
-  2. ``plan_splits``     — explode each doc into page-range chunks and
-                           hash-repartition on (url, chunk) so giant docs
-                           spread across the cluster. Each chunk row carries
-                           ONLY its own pages' bytes (payload ∝ chunk pages):
-                           shipping the whole document per chunk would
-                           amplify the heaviest column by the very skew
-                           factor the split defends against (a 10^4-page doc
-                           at 16 pages/chunk = 625 copies through the
-                           exchange). The synthetic PLP1 container is
-                           page-sliceable; for real PDFs the chunk payload
-                           becomes an object-store reference + page range
-                           (fitz opens lazily per range) instead of bytes.
-  3. ``rasterize_pages`` — mapInPandas over chunks, emitting one row per
-                           page. The page payload column stands in for the
-                           rendered pixmap + text layer (pdf_converter.py:84-96
-                           renders at zoom = dpi/72).
+  1. ``plan_splits``     — cheap metadata probe (page count from the
+                           header; the real backend is
+                           ``fitz.open(...).page_count``) fused with the
+                           chunk fan-out: explode each doc into page-range
+                           chunks and hash-repartition on (url, chunk) so
+                           giant docs spread across the cluster. Each chunk
+                           row carries ONLY its own pages' bytes (payload ∝
+                           chunk pages): shipping the whole document per
+                           chunk would amplify the heaviest column by the
+                           very skew factor the split defends against (a
+                           10^4-page doc at 16 pages/chunk = 625 copies
+                           through the exchange). The synthetic PLP1
+                           container is page-sliceable; for real PDFs the
+                           chunk payload becomes an object-store reference
+                           + page range (fitz opens lazily per range)
+                           instead of bytes.
+  2. ``detect.rasterize_detect_enrich`` — the one render of each page
+                           (``_render_page``, pdf_converter.py:84-96 renders
+                           at zoom = dpi/72), fused with detection.
+  3. ``rasterize_pages`` — mapInPandas over chunks that slices them into one
+                           row per page WITHOUT rendering: the page payload
+                           column (the page's text layer, standing in for
+                           the rendered pixmap) for crops and VLM requests.
 
-All three stages are Arrow-batched; no per-row Python outside the UDFs.
+Both chunk readers go through ``decode_chunk`` and ``serialize_page``.
+All stages are Arrow-batched; no per-row Python outside the UDFs.
 """
 
 from __future__ import annotations
@@ -40,23 +46,24 @@ DEFAULT_CHUNK_PAGES = 16
 
 PAGE_SCHEMA = (
     "url string, page_no int, width int, height int, page_payload binary, "
-    "render_checksum long, error string"
+    "error string"
 )
 
 
-def _probe_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..synthdata import html_page_count
+def decode_chunk(payload: bytes, start: int, end: int) -> list[dict]:
+    """The page dicts of one planned chunk: the PLP1 body's pages with
+    ``start <= page_no < end``. Raises on a body that is not JSON or whose
+    entries are not page dicts (C6); callers quarantine the chunk with
+    stage 'rasterize'."""
+    doc = json.loads(bytes(payload)[8:])  # skip the PLP1 header
+    return [pg for pg in doc["pages"] if start <= pg["page_no"] < end]
 
-    for pdf in it:
-        counts = [html_page_count(bytes(p)) for p in pdf["html"]]
-        yield pd.DataFrame({"url": pdf["url"], "total_pages": counts})
 
-
-def probe_pages(pages: DataFrame) -> DataFrame:
-    """(url, total_pages) — the S3 metadata probe (pdf_converter.py:29-57)."""
-    return pages.select("url", "html").mapInPandas(
-        _probe_batches, schema="url string, total_pages int"
-    )
+def serialize_page(pg: dict) -> bytes:
+    """One page's payload bytes: compact JSON of the decoded page dict
+    (value-identical to the page in the source document; not its original
+    bytes)."""
+    return json.dumps(pg, separators=(",", ":")).encode()
 
 
 def _slice_chunk(pages_list: list[dict], start: int, end: int) -> bytes:
@@ -328,53 +335,43 @@ def _render_page(pg: dict) -> int:
     return int(img.sum() * 1000) % (1 << 31)
 
 
-def _rasterize_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _slice_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in it:
         cols: dict[str, list] = {
             "url": [], "page_no": [], "width": [], "height": [],
-            "page_payload": [], "render_checksum": [], "error": [],
+            "page_payload": [], "error": [],
         }
+        out = list(cols.values())
 
-        def emit(url, page_no, w, h, payload, cks, err):
-            cols["url"].append(url)
-            cols["page_no"].append(page_no)
-            cols["width"].append(w)
-            cols["height"].append(h)
-            cols["page_payload"].append(payload)
-            cols["render_checksum"].append(cks)
-            cols["error"].append(err)
+        def emit(*row):
+            for col, v in zip(out, row):
+                col.append(v)
 
         for url, payload, start, end in zip(
             pdf["url"], pdf["html"], pdf["page_start"], pdf["page_end"]
         ):
             try:
-                doc = json.loads(bytes(payload)[8:])  # skip the PLP1 header
-                # materialize the page filter inside the try: a valid-JSON
-                # body whose entries aren't page dicts (C6) must quarantine
-                # the doc chunk, not fail the task
-                in_range = [pg for pg in doc["pages"]
-                            if start <= pg["page_no"] < end]
+                in_range = decode_chunk(payload, start, end)
             except Exception as exc:  # noqa: BLE001 — C6 quarantine semantics
-                emit(url, int(start), 0, 0, None, -1,
+                emit(url, int(start), 0, 0, None,
                      f"{type(exc).__name__}: {exc}")
                 continue
             for pg in in_range:
                 try:
-                    emit(url, pg["page_no"], pg["width"], pg["height"],
-                         json.dumps(pg, separators=(",", ":")).encode(),
-                         _render_page(pg), None)
+                    # int(): a size that is no int must not reach the int
+                    # columns, where its Arrow cast would fail the whole
+                    # task; such a page never renders, and run_pipeline's
+                    # semi-join drops every page that did not render
+                    emit(url, pg["page_no"], int(pg["width"]),
+                         int(pg["height"]), serialize_page(pg), None)
                 except Exception as exc:  # noqa: BLE001
-                    emit(url, pg.get("page_no", int(start)), 0, 0, None, -1,
+                    emit(url, pg.get("page_no", int(start)), 0, 0, None,
                          f"{type(exc).__name__}: {exc}")
         yield pd.DataFrame(cols)
 
 
 def rasterize_pages(planned: DataFrame) -> DataFrame:
-    """(url, html, page_start, page_end) -> one row per page (P1)."""
-    return planned.mapInPandas(_rasterize_batches, schema=PAGE_SCHEMA)
-
-
-def rasterize(pages: DataFrame, chunk_pages: int = DEFAULT_CHUNK_PAGES,
-              num_partitions: int | None = None) -> DataFrame:
-    """Convenience: plan + rasterize."""
-    return rasterize_pages(plan_splits(pages, chunk_pages, num_partitions))
+    """(url, html, page_start, page_end) -> one row per decoded page (P1),
+    with its payload; a chunk that fails to decode is one error row. No
+    render: run_pipeline keeps the pages the fused stage rendered."""
+    return planned.mapInPandas(_slice_batches, schema=PAGE_SCHEMA)

@@ -6,11 +6,13 @@ pages -> plan_splits (skew salting)
          rows) -> normalize (native) -> persist once
       -> { enriched (detection rows) -> stats aggs || caption matching
            || groupBy(url) doc-text assembly;
-           page rows -> per-doc page counts;
+           page rows -> per-doc page counts, and the page set of
+           `rasterized` (rasterize_pages' slices, no render);
            error rows -> quarantine }
 
 Every page is rendered once: the persisted fused output is the hub that
-enriched, quarantine and the per-doc page counts all read. Release it with
+enriched, quarantine, the per-doc page counts and the rasterized page set
+all read. Release it with
 ``PipelineOutputs.unpersist()`` (see sources.catalog for the Iceberg/parquet
 stage-checkpoint helper that replaces the persist on a cluster).
 """
@@ -35,9 +37,9 @@ from ..operators.stats import doc_stats
 
 @dataclass
 class PipelineOutputs:
-    # one row per page, from a separate rasterize_pages lineage: reading it
-    # re-renders every page. Only crops (render_crops) and VLM requests
-    # (build_vlm_requests) read it; the default job never does
+    # one row per rendered page with its payload: rasterize_pages' slices
+    # (no render) kept to the fused output's page rows. Only crops
+    # (render_crops) and VLM requests (build_vlm_requests) read it
     rasterized: DataFrame
     detections: DataFrame     # normalized detections
     enriched: DataFrame       # + reading_order_rank, clipped text
@@ -58,20 +60,23 @@ def run_pipeline(
     backend_factory=StubDetectorBackend,
     chunk_pages: int = 16,
     num_partitions: int | None = None,
-    persist_enriched: bool = True,
 ) -> PipelineOutputs:
-    # persist_enriched: enriched / quarantine / page counts (and through
-    # them matched, doc_text, doc_stats) all read the fused output; without
-    # the persist each one re-runs the render stage from the scan. On a
+    planned = plan_splits(pages, chunk_pages=chunk_pages, num_partitions=num_partitions)
+    # rasterize + inference + clipped text + XY-cut in ONE mapInPandas
+    # stage, the only render of the job (see rasterize_detect_enrich).
+    # Persisted: enriched / quarantine / page counts / the rasterized page
+    # set (and through them matched, doc_text, doc_stats) all read it. On a
     # cluster, replace the persist with a catalog.checkpoint_stage (same
     # cut point, durable + resumable).
-    planned = plan_splits(pages, chunk_pages=chunk_pages, num_partitions=num_partitions)
-    rasterized = rasterize_pages(planned).where(F.col("error").isNull()).drop("error")
-    # rasterize + inference + clipped text + XY-cut in ONE mapInPandas
-    # stage, the only render of the job (see rasterize_detect_enrich)
-    fused = normalize_detections(rasterize_detect_enrich(planned, backend_factory))
-    if persist_enriched:
-        fused = fused.persist()
+    fused = normalize_detections(
+        rasterize_detect_enrich(planned, backend_factory)).persist()
+    page_rows = fused.where(F.col("stage") == "page")
+    # the page payloads are re-sliced from the chunks, not cached; the
+    # semi-join keeps exactly the pages the fused stage rendered
+    rasterized = (
+        rasterize_pages(planned).where(F.col("error").isNull()).drop("error")
+        .join(page_rows.select("url", "page_no"), ["url", "page_no"], "left_semi")
+    )
     enriched = fused.where(F.col("stage").isNull()).drop("stage", "error")
     # C6 error containment: failed chunks/pages are quarantine rows with
     # their stage label, never failed jobs (main.py:336-354 analogue)
@@ -80,7 +85,7 @@ def run_pipeline(
     )
     # page rows count every rendered page, including zero-detection pages
     # and pages whose detect leg failed
-    total_pages = fused.where(F.col("stage") == "page").groupBy("url").agg(
+    total_pages = page_rows.groupBy("url").agg(
         F.count("*").cast("int").alias("total_pages")
     )
     return PipelineOutputs(

@@ -14,7 +14,7 @@ from paper_layout_parser_spark.operators.annotate import (
     annotate_and_parse,
     annotate_pages,
 )
-from paper_layout_parser_spark.operators.rasterize import rasterize
+from paper_layout_parser_spark.plans.pipeline import run_pipeline
 
 from . import oracle
 from .conftest import SF_SMALL
@@ -22,12 +22,18 @@ from .conftest import SF_SMALL
 
 class TestAnnotateStage:
     @pytest.fixture(scope="class")
-    def pages(self, spark):
-        return rasterize(
-            build_pages(spark, SF_SMALL).where(
-                F.regexp_extract("url", r"([0-9]+)$", 1).cast("long").isin(1, 2, 3)
-            )
-        ).where("error is null").drop("error").persist()
+    def out(self, spark):
+        out = run_pipeline(build_pages(spark, SF_SMALL).where(
+            F.regexp_extract("url", r"([0-9]+)$", 1).cast("long").isin(1, 2, 3)
+        ))
+        yield out
+        out.unpersist()
+
+    @pytest.fixture(scope="class")
+    def pages(self, out):
+        pages = out.rasterized.persist()
+        yield pages
+        pages.unpersist()
 
     def test_roundtrip_matches_spec(self, pages):
         gt = annotate_and_parse(pages)
@@ -67,7 +73,7 @@ class TestAnnotateStage:
         assert "RoundRobinPartitioning(2)" in plan
         assert "Coalesce" not in plan
 
-    def test_empty_pages_never_call_the_client(self, spark, pages):
+    def test_empty_pages_never_call_the_client(self, out, pages):
         """F7 short-circuit: pages with no figure/table regions must produce
         ZERO API calls. TattlingClient tags any empty-page call with a
         sentinel id that would surface in the parsed output."""
@@ -90,11 +96,8 @@ class TestAnnotateStage:
         assert gt.where(F.col("figure_id") == "EMPTY_CALL").count() == 0
         # detections semi-join path
         from paper_layout_parser_spark.operators.annotate import annotatable_pages
-        from paper_layout_parser_spark.operators.detect import (
-            StubDetectorBackend, detect_layout, normalize_detections,
-        )
 
-        det = normalize_detections(detect_layout(pages, StubDetectorBackend))
+        det = out.detections
         kept = annotatable_pages(pages, det)
         assert 0 < kept.count() < total
         gt2 = annotate_and_parse(pages, detections=det,

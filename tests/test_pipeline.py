@@ -28,7 +28,7 @@ def corpus(spark):
     pages = build_pages(spark, SF_SMALL).where(
         F.regexp_extract("url", r"([0-9]+)$", 1).cast("long") < N_DOCS
     ).persist()
-    out = run_pipeline(pages, persist_enriched=True)
+    out = run_pipeline(pages)
     out.matched = out.matched.persist()
     yield pages, out
     pages.unpersist()
@@ -84,19 +84,30 @@ def test_doc_stats_and_summary(corpus):
 
 def test_page_counts_include_detect_fault_pages(spark):
     """A page that renders but fails detection still counts toward its
-    document's total_pages, and quarantines exactly once as 'detect'."""
+    document's total_pages, and quarantines exactly once as 'detect'. A
+    page that fails to render (it still serializes) counts nowhere: it is
+    absent from the rasterized page table and from total_pages, and
+    quarantines exactly once as 'rasterize' — also when its malformed
+    width would not fit the page table's int column."""
     good_block = {"b": 0, "class_id": 0, "name": "Title", "conf": 0.9,
                   "bbox": [10.0, 10.0, 100.0, 50.0], "text": "title p1"}
     bad_block = {"b": 0, "class_id": 0, "conf": 0.9,  # no 'name'
                  "bbox": [10.0, 10.0, 100.0, 50.0], "text": "title p2"}
-    doc = {"v": 1, "pages": [
-        {"page_no": 1, "width": 400, "height": 400, "blocks": [good_block]},
-        {"page_no": 2, "width": 400, "height": 400, "blocks": [bad_block]},
-    ]}
-    body = json.dumps(doc).encode()
+    unrenderable = dict(good_block, bbox=["a", 10.0, 100.0, 50.0])
+
+    def two_pages(page2_block, page2_width=400):
+        body = json.dumps({"v": 1, "pages": [
+            {"page_no": 1, "width": 400, "height": 400, "blocks": [good_block]},
+            {"page_no": 2, "width": page2_width, "height": 400,
+             "blocks": [page2_block]},
+        ]}).encode()
+        return sd.HTML_MAGIC + b"\x00\x00\x00\x02" + body
+
     rows = [
         ("u_clean", sd.doc_html(4)),
-        ("u_detect_fault", sd.HTML_MAGIC + b"\x00\x00\x00\x02" + body),
+        ("u_detect_fault", two_pages(bad_block)),
+        ("u_render_fault", two_pages(unrenderable)),
+        ("u_size_fault", two_pages(good_block, page2_width="400")),
     ]
     pages = spark.createDataFrame(rows, "url string, html binary").select(
         "url",
@@ -110,8 +121,17 @@ def test_page_counts_include_detect_fault_pages(spark):
     assert stats["u_detect_fault"]["total_pages"] == 2
     assert stats["u_detect_fault"]["total_detections"] == 1
     assert stats["u_clean"]["total_pages"] == sd.n_pages(4)
-    q = [(r["url"], r["page_no"], r["stage"]) for r in out.quarantine.collect()]
-    assert q == [("u_detect_fault", 2, "detect")]
+    assert stats["u_render_fault"]["total_pages"] == 1
+    assert stats["u_size_fault"]["total_pages"] == 1
+    q = sorted((r["url"], r["page_no"], r["stage"])
+               for r in out.quarantine.collect())
+    assert q == [("u_detect_fault", 2, "detect"),
+                 ("u_render_fault", 2, "rasterize"),
+                 ("u_size_fault", 2, "rasterize")]
+    for url in ("u_render_fault", "u_size_fault"):
+        rasterized = [r["page_no"] for r in
+                      out.rasterized.where(F.col("url") == url).collect()]
+        assert rasterized == [1]
 
 
 def test_class_stats_exact_average(corpus):
